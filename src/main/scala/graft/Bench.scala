@@ -422,12 +422,14 @@ object Bench {
 
   /** Print the record (both lines) exactly once per run — the normal
     * path and the shutdown hook both land here; whoever claims the flag
-    * first emits, the other is a no-op. Flushes stdout so a dying JVM's
-    * tail carries the record. */
+    * first emits, the other is a no-op. Both lines go out in one `print`
+    * and a flush, so a kill cannot leave the compact line alone on a dying
+    * JVM's tail. */
   private[graft] def emitRecord(log: RunLog,
       refQ: Map[String, Double], refSf1: Map[String, Double],
       refApplies: Boolean, sfDir: String,
-      sf1RecallJson: String = "", splitsJson: String = ""): Boolean = {
+      sf1RecallJson: String = "", splitsJson: String = "",
+      out: java.io.PrintStream = System.out): Boolean = {
     if (!log.claimEmit()) return false
     val (full, compact) = composeRecord(log, refQ, refSf1, refApplies,
       sfDir, sf1RecallJson, splitsJson)
@@ -439,9 +441,8 @@ object Bench {
     // rc-0 run). The LAST line is now the one with "queries":{...}; the
     // compact line still prints (metric-keyed consumers of
     // "total_compact" are unaffected by its position).
-    println(compact)
-    println(full)
-    System.out.flush()
+    out.print(s"$compact\n$full\n")
+    out.flush()
     true
   }
 
@@ -515,6 +516,8 @@ object Bench {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.sql.codegen.cache.maxEntries",
+        GraftExtensions.CodegenCacheEntries)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")

@@ -17,3 +17,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(GraftFunctions.beLongBytesDescriptor)
   }
 }
+
+object GraftExtensions {
+  /** `spark.sql.codegen.cache.maxEntries` of cli/Main, Bench and Verify:
+    * Spark's 100 is below one five-report pass (~193 classes), so each
+    * pass recompiled them; one Verify run at sf0.01 generates 3,306. */
+  val CodegenCacheEntries = 4000
+}

@@ -573,6 +573,8 @@ object Main {
           .master(s"local[$cpus]")
           .config("spark.sql.shuffle.partitions", cpus)
           .config("spark.sql.extensions", "graft.GraftExtensions")
+          .config("spark.sql.codegen.cache.maxEntries",
+            graft.GraftExtensions.CodegenCacheEntries)
           .config("spark.ui.enabled", "false")
           .config("spark.sql.session.timeZone", "UTC")
           .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")

@@ -24,6 +24,26 @@ object Reports {
   private def filtered(df: DataFrame, files: Seq[String]): DataFrame =
     if (files.isEmpty) df else df.where(col("sstable_id").isin(files: _*))
 
+  /** Renders a report's `sections` as concurrent Spark jobs, texts in
+    * order; callers first run one step alone (F2 guard or first section)
+    * so each shared PlanCache scan is built by one job. One daemon thread
+    * per section, created by the caller so section jobs inherit its Spark
+    * local properties and active session (a pre-started pool would not).
+    * A failed section's own exception is rethrown once all have ended. */
+  private[graft] def concurrently(sections: (() => String)*): Seq[String] = {
+    val results = new Array[Either[Throwable, String]](sections.size)
+    val threads = sections.zipWithIndex.map { case (render, i) =>
+      val t = new Thread(() => results(i) =
+        try Right(render()) catch { case e: Throwable => Left(e) },
+        s"graft-report-section-$i")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    threads.foreach(_.join())
+    results.toSeq.map(_.fold(throw _, identity))
+  }
+
   /** `summary` (SummaryCollector.java): per-table rollup. */
   def summary(spark: SparkSession, dir: String): String = {
     val df = Summary.rollup(spark, dir)
@@ -40,8 +60,9 @@ object Reports {
   def sstables(spark: SparkSession, dir: String,
       sstableFilter: Seq[String] = Nil): String = {
     val df = filtered(Summary.sstablesReport(spark, dir), sstableFilter)
-    if (df.isEmpty) NoData
-    else section("SSTables", df)
+    val rows = df.limit(TableBuilder.MaxRows).collect()
+    if (rows.isEmpty) NoData
+    else s"SSTables\n${TableBuilder.render(df.columns.toSeq, rows.toSeq)}"
   }
 
   /** `pstats` (PartitionSizeStatisticsCollector.java): distribution +
@@ -53,16 +74,16 @@ object Reports {
     // F1 threads through EVERY section: the reference applies -f inside
     // getColumnFamily (ColumnFamilyBackend.java:80-89), so the top-Ns and
     // the sstable section reflect the filter exactly as the distribution does.
-    val dist =
-      if (sstableFilter.isEmpty) PStats.sizeDistribution(spark, dir)
-      else PStats.filteredSizeDistribution(spark, dir, sstableFilter)
-    Seq(
-      section("Partition size distribution", dist),
-      section(s"Largest partitions (top $topN)",
+    concurrently(
+      () => section("Partition size distribution",
+        if (sstableFilter.isEmpty) PStats.sizeDistribution(spark, dir)
+        else PStats.filteredSizeDistribution(spark, dir, sstableFilter)),
+      () => section(s"Largest partitions (top $topN)",
         PStats.topBySize(spark, dir, topN, sstableFilter)),
-      section(s"Partitions in most sstables (top $topN)",
+      () => section(s"Partitions in most sstables (top $topN)",
         PStats.topByTableCount(spark, dir, topN, sstableFilter)),
-      section("SSTables", PStats.sstableSection(spark, dir, sstableFilter))
+      () => section("SSTables",
+        PStats.sstableSection(spark, dir, sstableFilter))
     ).mkString("\n")
   }
 
@@ -75,22 +96,25 @@ object Reports {
     val f = sstableFilter
     if (filtered(Fixtures.liPscan(spark, dir), f).isEmpty)
       return NoData // F2 guard
-    Seq(
-      section("Totals", CfStats.totals(spark, dir, f, gcBeforeS)),
-      section("Rows per partition", CfStats.rowsDistribution(spark, dir, f)),
-      section("Cells per partition", CfStats.cellsDistribution(spark, dir, f)),
-      section("Tombstones per partition (with tombstones)",
+    concurrently(
+      () => section("Totals", CfStats.totals(spark, dir, f, gcBeforeS)),
+      () => section("Rows per partition",
+        CfStats.rowsDistribution(spark, dir, f)),
+      () => section("Cells per partition",
+        CfStats.cellsDistribution(spark, dir, f)),
+      () => section("Tombstones per partition (with tombstones)",
         CfStats.tombstonesDistribution(spark, dir, f)),
-      section(s"Widest partitions (top $topN)",
+      () => section(s"Widest partitions (top $topN)",
         CfStats.topWide(spark, dir, topN, f)),
-      section(s"Most tombstones (top $topN)",
+      () => section(s"Most tombstones (top $topN)",
         CfStats.topTombstones(spark, dir, topN, f, gcBeforeS)),
-      section(s"Most deleted rows (top $topN)",
+      () => section(s"Most deleted rows (top $topN)",
         CfStats.topDeletedRows(spark, dir, topN, f)),
-      section("TTL histogram", CfStats.ttlHistogram(spark, dir, f)
+      () => section("TTL histogram", CfStats.ttlHistogram(spark, dir, f)
         .withColumn("ttl", udf(Formatters.formatTtl _).apply(col("ttl_s")))
         .select("ttl", "cell_count")),
-      section("SSTables", CfStats.sstableStats(spark, dir, f, gcBeforeS))
+      () => section("SSTables",
+        CfStats.sstableStats(spark, dir, f, gcBeforeS))
     ).mkString("\n")
   }
 
@@ -101,10 +125,10 @@ object Reports {
   def purge(spark: SparkSession, dir: String, topN: Int = 10,
       sstableFilter: Seq[String] = Nil,
       gcBeforeS: Long = Fixtures.GcBeforeS): String =
-    Seq(
-      section(s"Most reclaimable partitions (top $topN)",
-        Purge.top(spark, dir, topN, sstableFilter, gcBeforeS)),
-      section("Totals", Purge.totals(spark, dir, sstableFilter, gcBeforeS))
+    (section(s"Most reclaimable partitions (top $topN)",
+      Purge.top(spark, dir, topN, sstableFilter, gcBeforeS)) +:
+      concurrently(() => section("Totals",
+        Purge.totals(spark, dir, sstableFilter, gcBeforeS)))
     ).mkString("\n")
 
   /** Methods the `dedup` extension command dispatches to. */

@@ -2,7 +2,7 @@ package graft.render
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 
 /** K1: ASCII table sink with the reference's exact format
   * (TableBuilder.java:15-81): `+---+` borders, column 0 left-aligned,
@@ -40,14 +40,17 @@ final class TableBuilder {
 }
 
 object TableBuilder {
+  val MaxRows = 1000
+
   /** Render a (small, already-aggregated) report DataFrame. */
-  def render(df: DataFrame, maxRows: Int = 1000): String = {
-    val tb = new TableBuilder
-    tb.setHeader(df.columns.toIndexedSeq: _*)
-    df.limit(maxRows).collect().foreach { row =>
-      tb.addRow((0 until row.length).map(i =>
-        if (row.isNullAt(i)) "" else row.get(i).toString): _*)
-    }
+  def render(df: DataFrame, maxRows: Int = MaxRows): String =
+    render(df.columns.toSeq, df.limit(maxRows).collect().toSeq)
+
+  /** Render rows already collected under `header`. */
+  def render(header: Seq[String], rows: Seq[Row]): String = {
+    val tb = new TableBuilder().setHeader(header: _*)
+    rows.foreach(r =>
+      tb.addRow(r.toSeq.map(v => if (v == null) "" else v.toString): _*))
     tb.toString
   }
 }

@@ -144,93 +144,45 @@ object Fixtures {
 
   /** One row per (sstable, partition) — the pre-collate granularity the
     * reference accumulates during its Data.db scan (DataReader.java:53-121).
-    * Partial aggregation happens map-side (HashAggregate partial) before the
-    * shuffle on the group keys — the distributed analog of the reference's
-    * per-sstable accumulators. */
+    * Two hash aggregations, per row (`clustering`, which also spreads a hot
+    * partition across reducers) then per partition, count rows and deleted
+    * rows without a distinct aggregate's Expand; a null `clustering` is not
+    * a row. Both combine map-side before their shuffle — the distributed
+    * analog of the reference's per-sstable accumulators. */
   def partitionScan(cells: DataFrame,
-      gcBeforeS: Long = GcBeforeS): DataFrame =
+      gcBeforeS: Long = GcBeforeS): DataFrame = {
+    // per-row flag counts, summed again per partition
+    val flagCounts = Seq(
+      "cell_count" -> (col("kind") === "CELL"),
+      "tombstone_count" -> col("is_tombstone"),
+      "droppable_tombstone_count" ->
+        (col("is_tombstone") && col("local_deletion_time_s") < gcBeforeS),
+      "range_tombstone_count" -> (col("kind") === "RANGE_TOMBSTONE_MARKER"),
+      "live_cell_count" -> col("is_live"),
+      "expiring_cell_count" -> col("is_expiring"),
+      "counter_cell_count" -> col("is_counter"))
+    // (min, max) bound pairs; level two takes the min of mins, max of maxes
+    val bounds = Seq("timestamp_us", "local_deletion_time_s")
     cells
       // group keys kept narrow: keyspace is constant and key_formatted is
       // derivable from key, so neither rides the shuffle (re-attached below)
+      .groupBy(col("tbl"), col("sstable_id"), col("key"), col("clustering"))
+      .agg(sum("size_bytes").as("size"),
+        (max("is_tombstone").as("row_deleted") +: flagCounts.map {
+          case (n, flag) => sum(when(flag, 1L).otherwise(0L)).as(n)
+        }) ++ bounds.flatMap(b =>
+          Seq(min(b).as(s"min_$b"), max(b).as(s"max_$b"))): _*)
       .groupBy(col("tbl"), col("sstable_id"), col("key"))
-      .agg(
-        sum("size_bytes").as("size"),
-        countDistinct("clustering").as("row_count"),
-        countDistinct(when(col("is_tombstone"), col("clustering")))
-          .as("row_delete_count"),
-        count(when(col("kind") === "CELL", 1)).as("cell_count"),
-        sum(when(col("is_tombstone"), 1L).otherwise(0L)).as("tombstone_count"),
-        sum(when(col("is_tombstone") &&
-          col("local_deletion_time_s") < gcBeforeS, 1L).otherwise(0L))
-          .as("droppable_tombstone_count"),
-        sum(when(col("kind") === "RANGE_TOMBSTONE_MARKER", 1L).otherwise(0L))
-          .as("range_tombstone_count"),
-        sum(when(col("is_live"), 1L).otherwise(0L)).as("live_cell_count"),
-        sum(when(col("is_expiring"), 1L).otherwise(0L))
-          .as("expiring_cell_count"),
-        sum(when(col("is_counter"), 1L).otherwise(0L))
-          .as("counter_cell_count"),
-        min("timestamp_us").as("min_timestamp_us"),
-        max("timestamp_us").as("max_timestamp_us"),
-        min("local_deletion_time_s").as("min_local_deletion_time_s"),
-        max("local_deletion_time_s").as("max_local_deletion_time_s"))
+      .agg(sum("size").as("size"),
+        (count("clustering").as("row_count") +:
+          count(when(col("row_deleted") && col("clustering").isNotNull, 1))
+            .as("row_delete_count") +:
+          flagCounts.map { case (n, _) => sum(n).as(n) }) ++
+          bounds.flatMap(b => Seq(min(s"min_$b").as(s"min_$b"),
+            max(s"max_$b").as(s"max_$b"))): _*)
       .withColumn("keyspace", lit("ks1"))
       .withColumn("key_formatted", concat(lit("key-"), col("key")))
-
-  /** Skew-safe variant of [[partitionScan]] for pathological partitions: a
-    * single Cassandra partition with billions of cells funnels its whole
-    * cell stream into ONE reducer under the plain groupBy. Salting by
-    * `pmod(hash(clustering), buckets)` splits the hot key across `buckets`
-    * reducers; a second, tiny aggregation re-merges bucket partials. Every
-    * aggregate survives the split: sums/counts/min/max are distributive, and
-    * the distinct row counts stay exact because a clustering value maps to
-    * exactly one bucket (distinct-within-bucket is additive across buckets).
-    * Equivalence with the unsalted form is property-tested; AQE's skew
-    * handling covers moderate skew, this covers the degenerate case. */
-  def partitionScanSalted(cells: DataFrame, buckets: Int = 16,
-      gcBeforeS: Long = GcBeforeS): DataFrame =
-    cells
-      .withColumn("salt", pmod(hash(col("clustering")), lit(buckets)))
-      .groupBy(col("tbl"), col("sstable_id"), col("key"), col("salt"))
-      .agg(
-        sum("size_bytes").as("size"),
-        countDistinct("clustering").as("row_count"),
-        countDistinct(when(col("is_tombstone"), col("clustering")))
-          .as("row_delete_count"),
-        count(when(col("kind") === "CELL", 1)).as("cell_count"),
-        sum(when(col("is_tombstone"), 1L).otherwise(0L)).as("tombstone_count"),
-        sum(when(col("is_tombstone") &&
-          col("local_deletion_time_s") < gcBeforeS, 1L).otherwise(0L))
-          .as("droppable_tombstone_count"),
-        sum(when(col("kind") === "RANGE_TOMBSTONE_MARKER", 1L).otherwise(0L))
-          .as("range_tombstone_count"),
-        sum(when(col("is_live"), 1L).otherwise(0L)).as("live_cell_count"),
-        sum(when(col("is_expiring"), 1L).otherwise(0L))
-          .as("expiring_cell_count"),
-        sum(when(col("is_counter"), 1L).otherwise(0L))
-          .as("counter_cell_count"),
-        min("timestamp_us").as("min_timestamp_us"),
-        max("timestamp_us").as("max_timestamp_us"),
-        min("local_deletion_time_s").as("min_local_deletion_time_s"),
-        max("local_deletion_time_s").as("max_local_deletion_time_s"))
-      .groupBy(col("tbl"), col("sstable_id"), col("key"))
-      .agg(
-        sum("size").as("size"),
-        sum("row_count").as("row_count"),
-        sum("row_delete_count").as("row_delete_count"),
-        sum("cell_count").as("cell_count"),
-        sum("tombstone_count").as("tombstone_count"),
-        sum("droppable_tombstone_count").as("droppable_tombstone_count"),
-        sum("range_tombstone_count").as("range_tombstone_count"),
-        sum("live_cell_count").as("live_cell_count"),
-        sum("expiring_cell_count").as("expiring_cell_count"),
-        sum("counter_cell_count").as("counter_cell_count"),
-        min("min_timestamp_us").as("min_timestamp_us"),
-        max("max_timestamp_us").as("max_timestamp_us"),
-        min("min_local_deletion_time_s").as("min_local_deletion_time_s"),
-        max("max_local_deletion_time_s").as("max_local_deletion_time_s"))
-      .withColumn("keyspace", lit("ks1"))
-      .withColumn("key_formatted", concat(lit("key-"), col("key")))
+  }
 
   /** Cross-sstable collate by exact partition key — the reference's k-way
     * sorted merge (PartitionReader.java:55-71, PartitionStatistics.java:118-130)

@@ -178,6 +178,32 @@ class BenchSpec extends AnyFunSuite {
     assert(log.claimEmit() && !log.claimEmit())
   }
 
+  test("record emission: the compact and the full line leave in one " +
+      "print, compact first, then a flush") {
+    val log = new Bench.RunLog(3300.0, System.nanoTime(), None)
+    log.nqTotal = 1
+    log.record("q_a", (1.5, 0.0, 0.0, 0.0), 2)
+    val (full, compact) = Bench.composeRecord(log, Map("q_a" -> 1.0),
+      Map.empty, refApplies = true, sfDir = "/x/sf0.1")
+    val calls = scala.collection.mutable.ArrayBuffer.empty[String]
+    val out = new java.io.PrintStream(new java.io.ByteArrayOutputStream()) {
+      override def print(s: String): Unit = calls += s"print:$s"
+      override def println(s: String): Unit = calls += s"println:$s"
+      override def write(b: Array[Byte], off: Int, len: Int): Unit =
+        calls += "write"
+      override def flush(): Unit = calls += "flush"
+    }
+    assert(Bench.emitRecord(log, Map("q_a" -> 1.0), Map.empty,
+      refApplies = true, sfDir = "/x/sf0.1", out = out))
+    assert(calls.toSeq === Seq(s"print:$compact\n$full\n", "flush"))
+    assert(full.contains("\"queries\":{") &&
+      !compact.contains("\"queries\":{"))
+    // the emit flag is claimed: a second emission prints nothing
+    assert(!Bench.emitRecord(log, Map.empty, Map.empty,
+      refApplies = true, sfDir = "/x/sf0.1", out = out))
+    assert(calls.size === 2)
+  }
+
   test("wall budget (round 19): shouldStart refuses new measurements " +
       "past StopFrac of the budget and latches the truncated stamp; " +
       "retryAllowed caps contention-retry spend at RetryFrac") {

@@ -22,6 +22,137 @@ class CliAndHistogramSpec extends SparkSpec {
     assert(out(2).contains("Largest partitions"))
   }
 
+  /** The five reports rendered one section after another, on the calling
+    * thread — what `Reports` must reproduce byte for byte. */
+  private object Sequential {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    import graft.functions.Formatters
+    import graft.ops.{CfStats, PStats, Purge}
+    import graft.render.TableBuilder
+    import graft.sources.Fixtures
+
+    private def section(title: String, df: DataFrame) =
+      s"$title\n${TableBuilder.render(df)}"
+    private def empty(f: Seq[String]) = {
+      val pscan = Fixtures.liPscan(spark, Sf0001)
+      (if (f.isEmpty) pscan else pscan.where(col("sstable_id").isin(f: _*)))
+        .isEmpty
+    }
+
+    def summary: String = section("Summary", Summary.rollup(spark, Sf0001)
+      .withColumn("data_size", udf(Formatters.humanReadableByteCount _)
+        .apply(col("uncompressed_length")))
+      .withColumn("repair", format_string("%d/%d %d%%",
+        col("repaired_count"), col("sstable_count"), col("repair_pct")))
+      .select("keyspace", "tbl", "sstable_count", "data_size", "repair"))
+
+    def sstables(f: Seq[String]): String = {
+      val all = Summary.sstablesReport(spark, Sf0001)
+      val df = if (f.isEmpty) all else all.where(col("sstable_id").isin(f: _*))
+      if (df.isEmpty) Reports.NoData else section("SSTables", df)
+    }
+
+    def pstats(n: Int, f: Seq[String]): String =
+      if (empty(f)) Reports.NoData
+      else Seq(
+        section("Partition size distribution",
+          if (f.isEmpty) PStats.sizeDistribution(spark, Sf0001)
+          else PStats.filteredSizeDistribution(spark, Sf0001, f)),
+        section(s"Largest partitions (top $n)",
+          PStats.topBySize(spark, Sf0001, n, f)),
+        section(s"Partitions in most sstables (top $n)",
+          PStats.topByTableCount(spark, Sf0001, n, f)),
+        section("SSTables", PStats.sstableSection(spark, Sf0001, f))
+      ).mkString("\n")
+
+    def cfstats(n: Int, f: Seq[String], gc: Long): String =
+      if (empty(f)) Reports.NoData
+      else Seq(
+        section("Totals", CfStats.totals(spark, Sf0001, f, gc)),
+        section("Rows per partition", CfStats.rowsDistribution(spark, Sf0001, f)),
+        section("Cells per partition",
+          CfStats.cellsDistribution(spark, Sf0001, f)),
+        section("Tombstones per partition (with tombstones)",
+          CfStats.tombstonesDistribution(spark, Sf0001, f)),
+        section(s"Widest partitions (top $n)",
+          CfStats.topWide(spark, Sf0001, n, f)),
+        section(s"Most tombstones (top $n)",
+          CfStats.topTombstones(spark, Sf0001, n, f, gc)),
+        section(s"Most deleted rows (top $n)",
+          CfStats.topDeletedRows(spark, Sf0001, n, f)),
+        section("TTL histogram", CfStats.ttlHistogram(spark, Sf0001, f)
+          .withColumn("ttl", udf(Formatters.formatTtl _).apply(col("ttl_s")))
+          .select("ttl", "cell_count")),
+        section("SSTables", CfStats.sstableStats(spark, Sf0001, f, gc))
+      ).mkString("\n")
+
+    def purge(n: Int, f: Seq[String], gc: Long): String =
+      Seq(
+        section(s"Most reclaimable partitions (top $n)",
+          Purge.top(spark, Sf0001, n, f, gc)),
+        section("Totals", Purge.totals(spark, Sf0001, f, gc))
+      ).mkString("\n")
+  }
+
+  test("concurrent reports equal a sequential rendering of their sections " +
+      "(default, topN, sstable filter, gcBefore, NoData)") {
+    import graft.sources.Fixtures.GcBeforeS
+    assert(Reports.summary(spark, Sf0001) === Sequential.summary)
+    val cases = Seq(
+      (10, Nil, GcBeforeS),
+      (3, Nil, GcBeforeS),
+      (10, Seq("sst-1", "sst-3"), GcBeforeS),
+      (10, Nil, GcBeforeS - 30L * 86400L),
+      (10, Seq("sst-nope"), GcBeforeS))
+    cases.foreach { case (n, f, gc) =>
+      val label = s"topN=$n filter=$f gcBeforeS=$gc"
+      assert(Reports.sstables(spark, Sf0001, f) === Sequential.sstables(f),
+        label)
+      assert(Reports.pstats(spark, Sf0001, n, f) === Sequential.pstats(n, f),
+        label)
+      assert(Reports.cfstats(spark, Sf0001, n, f, gc) ===
+        Sequential.cfstats(n, f, gc), label)
+      assert(Reports.purge(spark, Sf0001, n, f, gc) ===
+        Sequential.purge(n, f, gc), label)
+    }
+    assert(Reports.cfstats(spark, Sf0001, sstableFilter = Seq("sst-nope")) ===
+      Reports.NoData)
+  }
+
+  private def sectionThreads: Seq[Thread] =
+    Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread]).toSeq
+      .filter(t => t.isAlive && t.getName.startsWith("graft-report-section"))
+
+  test("a failing section rethrows its own exception after every section " +
+      "thread has ended") {
+    val boom = new IllegalStateException("section failed")
+    val thrown = intercept[IllegalStateException] {
+      Reports.concurrently(
+        () => graft.sources.Tables.lineitem(spark, Sf0001).count().toString,
+        () => throw boom,
+        () => { Thread.sleep(200); "slow" })
+    }
+    assert(thrown eq boom)
+    assert(sectionThreads.isEmpty)
+  }
+
+  test("section threads inherit the caller's local properties and active " +
+      "session, and return their texts in order") {
+    val sc = spark.sparkContext
+    org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    sc.setLocalProperty("graft.test.tag", "reports")
+    try {
+      val seen = Reports.concurrently((0 until 9).map { i => () =>
+        assert(org.apache.spark.sql.SparkSession.getActiveSession
+          .contains(spark))
+        s"$i:${sc.getLocalProperty("graft.test.tag")}"
+      }: _*)
+      assert(seen === (0 until 9).map(i => s"$i:reports"))
+    } finally sc.setLocalProperty("graft.test.tag", null)
+    assert(sectionThreads.isEmpty)
+  }
+
   test("K2 progress sink: listener emits monotone percentages, reference " +
     "line format, terminal 100% line") {
     import graft.cli.Progress

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops._
@@ -78,15 +79,86 @@ class ReportsSpec extends SparkSpec {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }
 
-  test("salted partition scan == plain partition scan (skew-split exactness)") {
-    val cells = Fixtures.cells(spark, Sf0001)
-    def canon(df: org.apache.spark.sql.DataFrame) = {
-      val cols = df.columns.sorted.toIndexedSeq
-      df.select(cols.head, cols.tail: _*)
-        .collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
-    }
-    assert(canon(Fixtures.partitionScanSalted(cells, buckets = 7)) ===
-      canon(Fixtures.partitionScan(cells)))
+  /** The single-aggregation `countDistinct` form of
+    * `Fixtures.partitionScan`, kept as the reference the two-level scan
+    * must equal. */
+  private def distinctPartitionScan(cells: DataFrame,
+      gcBeforeS: Long = Fixtures.GcBeforeS): DataFrame =
+    cells
+      .groupBy(col("tbl"), col("sstable_id"), col("key"))
+      .agg(
+        sum("size_bytes").as("size"),
+        countDistinct("clustering").as("row_count"),
+        countDistinct(when(col("is_tombstone"), col("clustering")))
+          .as("row_delete_count"),
+        count(when(col("kind") === "CELL", 1)).as("cell_count"),
+        sum(when(col("is_tombstone"), 1L).otherwise(0L)).as("tombstone_count"),
+        sum(when(col("is_tombstone") &&
+          col("local_deletion_time_s") < gcBeforeS, 1L).otherwise(0L))
+          .as("droppable_tombstone_count"),
+        sum(when(col("kind") === "RANGE_TOMBSTONE_MARKER", 1L).otherwise(0L))
+          .as("range_tombstone_count"),
+        sum(when(col("is_live"), 1L).otherwise(0L)).as("live_cell_count"),
+        sum(when(col("is_expiring"), 1L).otherwise(0L))
+          .as("expiring_cell_count"),
+        sum(when(col("is_counter"), 1L).otherwise(0L))
+          .as("counter_cell_count"),
+        min("timestamp_us").as("min_timestamp_us"),
+        max("timestamp_us").as("max_timestamp_us"),
+        min("local_deletion_time_s").as("min_local_deletion_time_s"),
+        max("local_deletion_time_s").as("max_local_deletion_time_s"))
+      .withColumn("keyspace", lit("ks1"))
+      .withColumn("key_formatted", concat(lit("key-"), col("key")))
+
+  /** Same columns in the same order, and equal as multisets of rows. */
+  private def assertSameScan(cells: DataFrame): Unit = {
+    val twoLevel = Fixtures.partitionScan(cells)
+    val reference = distinctPartitionScan(cells)
+    assert(twoLevel.columns.toSeq === reference.columns.toSeq)
+    assert(twoLevel.count() > 0)
+    assert(twoLevel.exceptAll(reference).isEmpty &&
+      reference.exceptAll(twoLevel).isEmpty)
+  }
+
+  test("two-level partition scan == countDistinct form on the sf0.001 " +
+      "lineitem cells") {
+    assertSameScan(Fixtures.cells(spark, Sf0001))
+  }
+
+  test("two-level partition scan == countDistinct form on raw Data.db " +
+      "cells (the q44/q71 path)") {
+    val dir = graft.sources.datadb.DataDbFixture.ensureFiles(spark, Sf0001)
+    assertSameScan(graft.sources.datadb.DataDb.cells(spark, dir))
+  }
+
+  test("two-level partition scan == countDistinct form with a null " +
+      "clustering and a tombstone-only row") {
+    import spark.implicits._
+    // (key, clustering, kind, is_tombstone, size, ts, ldt, live)
+    val cells = Seq(
+      // partition 1: a null clustering (tombstone and live cell), one live
+      // row, one row whose only cells are tombstones
+      (1L, None, "CELL", true, 10L, 5L, 100L, false),
+      (1L, None, "CELL", false, 11L, 6L, Long.MaxValue, true),
+      (1L, Some(1L), "CELL", false, 12L, 7L, Long.MaxValue, true),
+      (1L, Some(2L), "CELL", true, 13L, 8L, 50L, false),
+      (1L, Some(2L), "RANGE_TOMBSTONE_MARKER", true, 14L, 9L, 60L, false),
+      // partition 2: only a null clustering, nothing deleted
+      (2L, None, "CELL", false, 15L, 1L, Long.MaxValue, true),
+      // partition 3: a row with a deleted and a live cell
+      (3L, Some(7L), "CELL", true, 16L, 2L, 10L, false),
+      (3L, Some(7L), "CELL", false, 17L, 3L, Long.MaxValue, true))
+      .toDF("key", "clustering", "kind", "is_tombstone", "size_bytes",
+        "timestamp_us", "local_deletion_time_s", "is_live")
+      .withColumn("tbl", lit("t"))
+      .withColumn("sstable_id", lit("sst-0"))
+      .withColumn("is_expiring", lit(false))
+      .withColumn("is_counter", lit(false))
+    assertSameScan(cells)
+    val counts = Fixtures.partitionScan(cells)
+      .select("key", "row_count", "row_delete_count").as[(Long, Long, Long)]
+      .collect().sortBy(_._1).toSeq
+    assert(counts === Seq((1L, 2L, 1L), (2L, 0L, 0L), (3L, 1L, 1L)))
   }
 
   test("purge invariants: 0 <= reclaimable <= size; gc=-inf purges nothing") {
